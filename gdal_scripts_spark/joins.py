@@ -8,23 +8,20 @@ Reference semantics (public GDAL 3.8.x tree):
 
 Spark-first redesign (NOT a port): the O(N·M) nested loop becomes either
 
-1. **broadcast PiP join** — polygons packed flat (:class:`geom.PolygonPack`)
-   and broadcast; one ``mapInPandas`` pass over the points emits (point,
-   polygon) pairs. Zero shuffle of the big side; the whole join is one map
-   stage. Right choice whenever the polygon side fits in executor memory
-   (the reference's entire use case). At 100 TB of points this is the plan
-   you want: scan → Arrow batch → numpy ray cast → pairs.
+1. **broadcast PiP join** (:func:`spatial_join_broadcast`, the flagship) —
+   polygons packed flat (:class:`geom.PolygonPack`) and broadcast; one
+   ``mapInArrow`` pass over the points emits (point, polygon) pairs. Zero
+   shuffle of the big side; the whole join is one map stage. Right choice
+   whenever the polygon side fits in executor memory (the reference's
+   entire use case): scan → Arrow batch → numpy ray cast → pairs.
 
-2. **cell-keyed equi-join** — both sides keyed by the Morton cell of a fixed
-   zoom (points: native expr; polygons: bbox tile cover, exploded), then a
-   plain Catalyst equi-join + exact PiP refine. This is the scale path when
-   BOTH sides are large (polygon side too big to broadcast): the spatial
-   predicate becomes a shuffle join Catalyst can plan, with AQE skew
-   splitting plus explicit **hot-cell salting** (north_rule: "partitioning /
-   shuffle / skew handled explicitly"): cells whose point count exceeds a
-   threshold get a salt from ``pmod(xxhash64(id), S)`` on the point side and
-   an ``explode(0..S-1)`` replica on the polygon side, so one hot Tokyo cell
-   spreads over S reducers instead of one straggler.
+2. **S2 covering join** (:func:`spatial_join_s2`, the scale path) — points
+   get an S2 leaf id, polygons a mixed-level S2 covering, and the spatial
+   predicate becomes parent-snap equi-joins Catalyst can plan, broadcast
+   or shuffled (AQE splits skewed partitions), then an exact even-odd
+   refine. With a PolygonPack the refine is the Arrow kernel; with
+   ``pack=None`` every polygon-side artifact is a table and the refine is
+   the pure-Column :func:`refine_pip_native`.
 
 Result-shape contract: pairs (point id, poly_id), deduplicated, matching the
 sequential oracle ``geom.np_pip_pairs`` exactly (BASELINE.json : north_star
@@ -32,8 +29,6 @@ sequential oracle ``geom.np_pip_pairs`` exactly (BASELINE.json : north_star
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -56,17 +51,15 @@ def with_cell(df: DataFrame, z: int, lon: str = "lon", lat: str = "lat",
 def polygon_cover_cells(pack: geom.PolygonPack, z: int) -> list[tuple[int, int]]:
     """(poly_id, cell) for every z-tile whose bounds intersect the bbox.
 
-    Conservative (bbox, not exact outline) — false candidates are removed by
-    the PiP refine, never false negatives. Mirrors the bbox pretest of
-    ``ogrlayer.cpp : FilterGeometry``.
+    Conservative (bbox, not exact outline) — a consumer's exact test
+    removes false candidates, never false negatives. Mirrors the bbox
+    pretest of ``ogrlayer.cpp : FilterGeometry``. This is the polygon side
+    of the raster burn (:mod:`gdal_scripts_spark.rasterize`), which keys
+    each (polygon, tile) fragment by the Morton cell of its tile.
 
-    Fully vectorized (round 5): the old per-polygon Python loop cost
-    3-5 ms/polygon — at 10k polygons that was 30-50 s of hidden DRIVER
-    time on every spatial_join_cells call, dwarfing the cluster work it
-    fed. Now one numpy pass over ``pack.bbox``: corner tiles for all
-    polygons at once, range enumeration via repeat/cumsum offsets, one
-    batched Morton encode. Semantics identical (same per-element tile and
-    cell functions, same clamping)."""
+    One numpy pass over ``pack.bbox``: corner tiles for all polygons at
+    once, range enumeration via repeat/cumsum offsets, one batched Morton
+    encode."""
     n = 1 << z
     bb = pack.bbox
     if len(bb) == 0:
@@ -224,7 +217,7 @@ def spatial_anti_join(points: DataFrame, pack: geom.PolygonPack, **kw) -> DataFr
 
 
 # ---------------------------------------------------------------------------
-# 2) cell-keyed equi-join with explicit hot-cell salting (the scale path)
+# 2) S2 covering join + exact refine (the scale path)
 # ---------------------------------------------------------------------------
 
 def _refine_pip(candidates: DataFrame, pack: geom.PolygonPack,
@@ -275,80 +268,6 @@ def _refine_pip(candidates: DataFrame, pack: geom.PolygonPack,
     if interior_col is not None:
         cols.append(interior_col)
     return candidates.select(*cols).mapInArrow(run, schema=out_schema)
-
-
-def spatial_join_cells(
-    points: DataFrame,
-    pack: geom.PolygonPack,
-    z: int = 8,
-    id_col: str = "image_id",
-    lon: str = "lon",
-    lat: str = "lat",
-    salt: bool = False,
-    n_salts: int = 8,
-    hot_cell_threshold: int = 10_000,
-    force_shuffle_join: bool = False,
-    refine: str = "arrow",
-) -> DataFrame:
-    """(id_col, poly_id) via cell equi-join + exact refine.
-
-    ``salt=True`` demonstrates the explicit skew defense: hot cells (point
-    count > threshold) are computed with one cheap count-by-cell pass, the
-    point side gets ``salt = pmod(xxhash64(id), S)`` and the polygon side is
-    exploded xS for those cells only, so the shuffle key becomes (cell, salt).
-    ``force_shuffle_join`` adds a merge-join hint so the A/B bench can show
-    the effect even when the polygon side would otherwise broadcast."""
-    spark = points.sparkSession
-    pts = with_cell(points.select(id_col, lon, lat), z)
-    cover = spark.createDataFrame(
-        polygon_cover_cells(pack, z), schema="poly_id long, cell long"
-    )
-
-    if salt:
-        hot = (
-            pts.groupBy("cell").count()
-            .filter(F.col("count") > hot_cell_threshold)
-            .select("cell", F.lit(True).alias("is_hot"))
-        )
-        pts = (
-            pts.join(F.broadcast(hot), "cell", "left")
-            .withColumn(
-                "salt",
-                F.when(
-                    F.col("is_hot").isNotNull(),
-                    F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts)),
-                ).otherwise(F.lit(0)),
-            )
-            .drop("is_hot")
-        )
-        cover = (
-            cover.join(F.broadcast(hot), "cell", "left")
-            .withColumn(
-                "salts",
-                F.when(
-                    F.col("is_hot").isNotNull(),
-                    F.array([F.lit(i) for i in range(n_salts)]),
-                ).otherwise(F.array(F.lit(0))),
-            )
-            .withColumn("salt", F.explode("salts"))
-            .drop("is_hot", "salts")
-        )
-        join_keys = ["cell", "salt"]
-    else:
-        join_keys = ["cell"]
-
-    if force_shuffle_join:
-        cover = cover.hint("merge")
-    cand = pts.join(cover, join_keys, "inner").select(id_col, lon, lat, "poly_id")
-    # no dedupe needed: a point has exactly one (cell, salt) and the cover
-    # lists each (poly_id, cell, salt) once, so a (point, poly) pair can
-    # only arise from a single join row — the old .distinct() here was a
-    # pure 6M-row shuffle tax
-    if refine == "native":
-        return refine_pip_native(
-            cand, pack_edges_df(spark, pack), id_col, lon, lat
-        )
-    return _refine_pip(cand, pack, id_col, lon, lat)
 
 
 def s2_cover_regions(
@@ -453,12 +372,10 @@ def spatial_join_s2(
     broadcast_regions: bool = True,
     prefilter_z: int | None = None,
     prefilter_tiles: DataFrame | None = None,
-    refine: str = "arrow",
     edges: DataFrame | None = None,
 ) -> DataFrame:
     """(id_col, poly_id) via S2 mixed-level covering join + exact refine —
-    the sphere-uniform alternative to the z-tile cover of
-    ``spatial_join_cells``.
+    the scale path beside :func:`spatial_join_broadcast`.
 
     Per polygon, the bbox gets a mixed-level S2 covering
     (s2.np_s2_cover_rect, driver-side, broadcastable): coarse interior
@@ -467,52 +384,50 @@ def spatial_join_s2(
     the S2 cell grid is near-uniform on the sphere, see
     test_cell_sizes_are_sphere_uniformish). Points pay ONE Arrow-batched
     leaf encode; the covering join itself is per-level parent-snap
-    EQUI-joins (pure Column bit math, broadcast hash), then the same exact
-    even-odd Arrow refine as every other path. Pair-identical to
-    spatial_join_broadcast by test.
+    EQUI-joins (pure Column bit math, broadcast hash), then an exact
+    even-odd refine. Pair-identical to spatial_join_broadcast by test.
+
+    The refine follows from ``pack``: with a PolygonPack it is the
+    Arrow-batched numpy kernel (measured ~20x faster than the pure-Column
+    fold, BENCH/pip_native_ab_r3.json); with ``pack=None`` it is
+    :func:`refine_pip_native`, the only refine that needs no driver-side
+    pack.
 
     ``cover="rings"`` switches the bbox covering to the shape-aware
     ``np_s2_cover_polygon_flags`` (holes respected, boundary-free cells
     decided by one ray cast) — a TIGHTER candidate set for spiky or holed
     polygons, identical final pairs. Its interior flag is EXACT (the
     boundary-free test runs on a superset box of the cell), so
-    interior-cell candidates are emitted as pairs straight from the
-    codegen equi-join, and ONLY boundary-cell candidates pay the
-    Arrow-batched even-odd refine. At 100 TB the refine traffic scales
-    with the polygon PERIMETER fraction of the data instead of the full
-    match volume — the filter-refine split that defuses the measured
-    copy-bandwidth floor (BENCH/BASELINE.md pip analysis).
+    interior-cell candidates skip the ray cast and only boundary-cell
+    candidates pay it: the refine work scales with the polygon PERIMETER
+    fraction of the data instead of the full match volume.
 
     Pass a precomputed ``regions`` table (:func:`s2_cover_regions`) to
     amortize the driver-side covering across queries; ``max_level`` /
     ``cover`` are then ignored for region construction.
 
-    ``broadcast_regions=False`` is the truly-huge-polygon-set regime
-    (round-4 verdict gap): the covering table is NOT broadcast — the
-    containment join runs as a SHUFFLED hash join on the snapped cell id
+    ``broadcast_regions=False`` is the truly-huge-polygon-set regime: the
+    covering table (and, with ``pack=None``, the edges table) is NOT
+    broadcast — the joins run as SHUFFLED hash joins
     (``hint("shuffle_hash")`` so Catalyst cannot silently re-broadcast a
-    small test table), which is the plan shape that survives region sets
-    of millions of polygons where a per-executor broadcast would OOM.
-    Pair-identical to the broadcast path by test; the probe side pays one
-    extra exchange of (id, lon, lat, leaf) — never bytes/captions.
+    small test table), the plan shape that survives region sets of
+    millions of polygons where a per-executor broadcast would OOM. The
+    probe side pays one extra exchange of (id, lon, lat, leaf).
 
-    ``prefilter_z`` (round 5) enables a PURE-COLUMN coarse prune ahead of
-    the Arrow leaf encode: each point's lon/lat grid key (step 360/2^z
-    degrees — THREE codegen ops, deliberately not the Morton interleave,
-    whose expression tree is ~100x bigger per row) is semi-joined against
-    the broadcast set of grid cells intersecting any polygon bbox, so for
-    SELECTIVE region sets (regions covering a small fraction of the
-    domain) ~all non-matching points are dropped inside whole-stage
-    codegen and never reach the Python worker. This is the structural
-    advantage of cell-keyed joins over the opaque broadcast-pip kernel:
-    the spatial key is a Catalyst expression, so Catalyst can prune with
-    it. Conservative (bbox-grid superset) — pairs unchanged, pinned by
-    test. Pass ``prefilter_tiles`` (one ``_ctile long`` column, from
-    :func:`_grid_cover_keys`) to amortize the driver-side cover build
+    ``prefilter_z`` enables a PURE-COLUMN coarse prune ahead of the Arrow
+    leaf encode: each point's lon/lat grid key (step 360/2^z degrees —
+    THREE codegen ops, deliberately not the Morton interleave, whose
+    expression tree is ~100x bigger per row) is semi-joined against the
+    broadcast set of grid cells intersecting any polygon bbox, so for
+    SELECTIVE region sets ~all non-matching points are dropped inside
+    whole-stage codegen and never reach the Python worker. Conservative
+    (bbox-grid superset) — pairs unchanged, pinned by test. Pass
+    ``prefilter_tiles`` (one ``_ctile long`` column, from
+    :func:`grid_cover_tiles_from_table`) to amortize the cover build
     across queries, like ``regions``.
 
-    ``split_interior`` picks how interior-cell candidates avoid the ray
-    cast, a MATCH-DENSITY tradeoff (both produce identical pairs):
+    ``split_interior`` picks how interior-cell candidates avoid the Arrow
+    ray cast, a MATCH-DENSITY tradeoff (both produce identical pairs):
 
     - False (default): one plan branch; interior candidates ride through
       the refine kernel flagged as proven matches (zero numpy work but
@@ -522,38 +437,24 @@ def spatial_join_s2(
     - True: the leaf-encoded probe is persisted (points-sized, narrow)
       and interior pairs are emitted straight from the codegen equi-join
       — they NEVER enter Python; only boundary candidates cross. Best for
-      dense overlap (candidates >> points), where the measured Arrow copy
-      floor is the dominant cost. Caller owns the persisted probe's
-      lifetime (it unpersists with the session/GC).
-
-    ``refine="native"`` (round 5) swaps the Arrow even-odd kernel for the
-    pure-Column :func:`refine_pip_native` parity fold (interior-flagged
-    candidates bypass it via OR short-circuit) — with
-    ``broadcast_regions=False`` BOTH joins run shuffled, so the whole
-    plan is JVM-codegen with no Python stage and no broadcast.
+      dense overlap (candidates >> points). Caller owns the persisted
+      probe's lifetime (it unpersists with the session/GC).
 
     ``pack=None`` is the fully TABLE-DRIVEN regime — the shape that
     survives a 1M-polygon dim side, where no driver-side PolygonPack can
-    exist: pass ``regions`` from :func:`s2_cover_regions_from_table`
-    (cluster-built covering), ``edges`` from
-    :func:`polygon_edges_df_from_table` (pure-Column edge build) with
-    ``refine="native"``, and (if prefiltering) ``prefilter_tiles``.
-    Nothing in that plan is bounded by driver memory or driver CPU;
-    missing artifacts raise eagerly.
+    exist: pass ``regions`` (e.g. :func:`s2_cover_regions_from_table`),
+    ``edges`` (e.g. :func:`polygon_edges_df_from_table`) and, if
+    prefiltering, ``prefilter_tiles``. Missing artifacts raise eagerly,
+    and so does ``edges`` next to a pack (the Arrow refine reads the
+    pack, so the edges would be ignored).
     """
     from . import s2 as s2mod
 
-    if refine not in ("arrow", "native"):
-        raise ValueError(f"refine must be 'arrow' or 'native', got {refine!r}")
     if pack is None:
-        # fully table-driven regime: every polygon-side artifact must
-        # arrive as a DataFrame (s2_cover_regions_from_table /
-        # polygon_edges_df_from_table / _grid_cover_keys tiles)
         missing = [
             n for n, ok in (
                 ("regions", regions is not None),
-                ("edges + refine='native'",
-                 refine == "native" and edges is not None),
+                ("edges", edges is not None),
                 ("prefilter_tiles",
                  prefilter_z is None or prefilter_tiles is not None),
             ) if not ok
@@ -562,6 +463,10 @@ def spatial_join_s2(
             raise ValueError(
                 "pack=None (table-driven S2 join) requires: "
                 + ", ".join(missing))
+    elif edges is not None:
+        raise ValueError(
+            "edges is the pack=None refine input; with a pack the Arrow "
+            "refine reads the pack — pass one or the other")
     spark = points.sparkSession
     if regions is None:
         regions = s2_cover_regions(spark, pack, max_level=max_level,
@@ -594,10 +499,9 @@ def spatial_join_s2(
     ).select(id_col, lon, lat, "poly_id", "interior")
     # no dedupe needed: each polygon's covering is a DISJOINT partition, so
     # a point matches at most one covering cell per polygon
-    if refine == "native":
-        e_df = edges if edges is not None else pack_edges_df(spark, pack)
+    if pack is None:
         return refine_pip_native(
-            cand, e_df, id_col, lon, lat,
+            cand, edges, id_col, lon, lat,
             broadcast=broadcast_regions, interior_col="interior")
     if split_interior:
         sure = cand.filter(F.col("interior")).select(id_col, "poly_id")
@@ -608,29 +512,25 @@ def spatial_join_s2(
 
 
 # ---------------------------------------------------------------------------
-# 3) fully JVM-native PiP join — zero Python workers in the plan
+# 3) pure-Column refine — the pack=None refine of spatial_join_s2
 # ---------------------------------------------------------------------------
 #
-# The Arrow refine (paths 1/2 above) is copy-bandwidth-bound on wide hosts:
-# BENCH/BASELINE.md measured a core-count-invariant serDe floor (a no-op
-# mapInArrow passthrough costs the same wall at local[8] and local[32] —
-# every byte crosses JVM→Arrow→socket→Python→socket→JVM). This path removes
-# Python entirely: polygon edges become a broadcast `array<struct>` column
-# and the even-odd ray cast becomes one `aggregate()` higher-order
-# expression, so the whole join is scan → codegen cell encode → broadcast
-# hash join → codegen bbox filter → JVM parity fold. Identical pair
-# semantics to geom.pip_even_odd_edges (same expression, same IEEE-double
-# evaluation order), verified against the sequential numpy oracle.
+# With no driver-side PolygonPack there is nothing to ship to a Python
+# worker, so the table-driven S2 join refines in the JVM: polygon edges
+# become an `array<struct>` column (pack_edges_df or, at scale,
+# polygon_edges_df_from_table), joined onto the candidates by poly_id, and
+# the even-odd ray cast becomes one `aggregate()` higher-order expression
+# after a codegen bbox filter. Identical pair semantics to
+# geom.pip_even_odd_edges (same expression, same IEEE-double evaluation
+# order), verified against the sequential numpy oracle.
 #
-# MEASURED VERDICT (BENCH/pip_native_ab_r3.json): at 8M points × 200
-# polygons the Arrow refine finishes in ~3.9 s where this path takes ~80 s
-# (identical 172,440,241 pairs). Spark evaluates higher-order functions
-# (`aggregate`, lambda over array<struct>) in interpreted mode — per-element
-# virtual dispatch and struct-field boxing — while the Arrow path pays the
-# serDe copy once and then runs the ray cast as vectorized numpy at memory
-# bandwidth. The engine therefore keeps refine="arrow" as the default; this
-# path exists as the measured counterfactual and for deployments where
-# Python workers are unavailable.
+# It is the slower refine wherever a pack exists
+# (BENCH/pip_native_ab_r3.json): at 8M points × 200 polygons the Arrow
+# refine finishes in ~3.9 s where the fold takes ~80 s (identical
+# 172,440,241 pairs). Spark evaluates higher-order functions (`aggregate`,
+# lambda over array<struct>) in interpreted mode — per-element virtual
+# dispatch and struct-field boxing — while the Arrow path pays the serDe
+# copy once and then runs the ray cast as vectorized numpy.
 
 def pack_edges_df(spark: SparkSession, pack: geom.PolygonPack) -> DataFrame:
     """One row per polygon: (poly_id, bbox, edges array<struct x1,y1,x2,y2>).
@@ -729,7 +629,7 @@ def polygon_edges_df_from_table(
     join loop: polygon sets of any size live as tables, both dim-side
     artifacts (covering + edges) are built by the cluster in one codegen
     pass each, and the join itself can run fully shuffled
-    (``spatial_join_s2(..., refine="native", broadcast_regions=False)``)
+    (``spatial_join_s2(points, None, ..., broadcast_regions=False)``)
     — nothing in the plan is bounded by driver memory or driver CPU.
     Row-identical to ``pack_edges_df`` on the same polygons (pinned by
     test): closed rings are un-closed the same way and each ring's last
@@ -768,36 +668,6 @@ def polygon_edges_df_from_table(
         F.array_max(ys).alias("bymax"),
         edges.alias("edges"),
     )
-
-
-def spatial_join_native(
-    points: DataFrame,
-    pack: geom.PolygonPack,
-    z: int = 8,
-    id_col: str = "image_id",
-    lon: str = "lon",
-    lat: str = "lat",
-) -> DataFrame:
-    """(id_col, poly_id) pairs with an all-JVM plan — no Python workers.
-
-    Plan: codegen cell encode → broadcast hash join vs the polygon cell
-    cover (prunes every point not near any polygon) → codegen bbox filter →
-    higher-order parity fold. Same pairs as ``spatial_join_broadcast`` /
-    ``spatial_join_cells`` (one join row per (point, poly) candidate, so no
-    dedupe needed). The scale ceiling is the broadcast cover + edge tables
-    (fine up to ~10^6 polygons); beyond that use ``spatial_join_cells``
-    whose cover side shuffles.
-
-    NOTE: measured ~20× slower than the Arrow refine on dense candidate
-    sets (interpreted HOF evaluation — see module comment above); prefer
-    ``spatial_join_broadcast`` unless Python workers are unavailable."""
-    spark = points.sparkSession
-    pts = with_cell(points.select(id_col, lon, lat), z)
-    cover = spark.createDataFrame(
-        polygon_cover_cells(pack, z), schema="poly_id long, cell long"
-    )
-    cand = pts.join(F.broadcast(cover), "cell").select(id_col, lon, lat, "poly_id")
-    return refine_pip_native(cand, pack_edges_df(spark, pack), id_col, lon, lat)
 
 
 # ---------------------------------------------------------------------------

@@ -1741,8 +1741,7 @@ _add("pq_topk_ivf", _q_pq_topk_ivf, None)  # approximate; golden-pinned rows
 def _q_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     images = fixtures.images_spark(spark, n=800)
     pack = fixtures.polygons_pack(p=20)
-    pairs = joins.spatial_join_cells(images, pack, z=8, salt=True,
-                                     hot_cell_threshold=100, n_salts=4)
+    pairs = joins.spatial_join_broadcast(images, pack)
     return (
         pairs.groupBy("poly_id").agg(F.count("*").alias("n_images"))
         .orderBy("poly_id")
@@ -1786,9 +1785,10 @@ SELECT event_id, poly_id FROM par WHERE k % 2 = 1
 
 
 def _q_pip_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2 via the all-JVM plan (joins.spatial_join_native): codegen cell
-    encode -> broadcast cover join -> bbox filter -> higher-order parity
-    fold. No Python worker anywhere; same pairs as the Arrow paths."""
+    """J2 via the table-driven S2 plan (joins.spatial_join_s2 with
+    pack=None): Arrow-batched S2 leaf encode -> broadcast covering join ->
+    bbox filter -> higher-order parity fold (joins.refine_pip_native) over
+    the polygons' edge table. Same pairs as the Arrow refine paths."""
     register_views(spark, sf_dir)
     pts = spark.table("events").select(
         "event_id",
@@ -1798,7 +1798,11 @@ def _q_pip_native(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("lat"),
     )
     pack = fixtures.polygons_pack(p=48)
-    return joins.spatial_join_native(pts, pack, z=8, id_col="event_id")
+    return joins.spatial_join_s2(
+        pts, None, id_col="event_id",
+        regions=joins.s2_cover_regions(spark, pack, max_level=9),
+        edges=joins.pack_edges_df(spark, pack),
+    )
 
 
 _add("pip_native_hof", _q_pip_native, _pip_native_oracle())
@@ -5707,10 +5711,10 @@ def _q_pip_s2_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     built BY THE CLUSTER (s2_cover_regions_from_table, one mapInPandas
     pass) and its edge arrays as pure Column HOFs
     (polygon_edges_df_from_table); the containment join and the parity
-    refine both run as SHUFFLED hash joins (refine='native',
-    broadcast_regions=False). No PolygonPack, no broadcast, nothing in
-    the plan bounded by driver memory or driver CPU — the shape that
-    survives a 1M-polygon dim side. Oracle: the same independent
+    refine (joins.refine_pip_native, implied by pack=None) both run as
+    SHUFFLED hash joins (broadcast_regions=False). No PolygonPack, no
+    broadcast, nothing in the plan bounded by driver memory or driver
+    CPU — the shape that survives a 1M-polygon dim side. Oracle: the same independent
     plain-SQL parity fold as every other PiP path."""
     pts = _pts_events(spark, sf_dir)
     polys = fixtures.polygons_spark(spark, p=48).repartition(8)
@@ -5718,7 +5722,7 @@ def _q_pip_s2_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = joins.polygon_edges_df_from_table(polys)
     return joins.spatial_join_s2(
         pts, None, id_col="event_id", regions=regions,
-        refine="native", edges=edges, broadcast_regions=False,
+        edges=edges, broadcast_regions=False,
     )
 
 

@@ -11,8 +11,13 @@ Local-mode tuning notes (tests run on one JVM, ``local[N]``):
   image-payload rows, bounding Python-worker memory (SURVEY.md §4
   "Physical-execution decisions") — fat rows hit the bytes cap long
   before the row cap, so raising the row cap is free for them.
-- AQE on: runtime coalescing + skew-join splitting complement the explicit
-  hot-cell salting in :mod:`gdal_scripts_spark.joins`.
+- AQE on: runtime partition coalescing, and skew-join splitting for the
+  shuffled joins (the shuffled S2 covering join in
+  :mod:`gdal_scripts_spark.joins`).
+
+:func:`sql_conf` holds the SQL/Arrow settings; both this factory and the
+spark-submit session (:func:`gdal_scripts_spark.cli.cluster_spark`) apply
+it, so the two cannot drift apart.
 """
 
 from __future__ import annotations
@@ -22,6 +27,21 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def sql_conf(
+    arrow_batch_rows: int = 131_072, arrow_batch_bytes: str = "32m"
+) -> dict[str, str]:
+    """SQL/Arrow settings shared by every session the engine builds."""
+    return {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": str(arrow_batch_rows),
+        "spark.sql.execution.arrow.maxBytesPerBatch": arrow_batch_bytes,
+    }
 
 
 def get_spark(
@@ -39,22 +59,16 @@ def get_spark(
     cluster manager — nothing here is local-mode-only except the master URL.
     """
     n = cpus or DEFAULT_CPUS
-    b = (
-        SparkSession.builder.master(f"local[{n}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", arrow_batch_bytes)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
-    )
-    for k, v in (extra_conf or {}).items():
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or n),
+        **sql_conf(arrow_batch_rows, arrow_batch_bytes),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+        "spark.driver.extraJavaOptions": "-Djava.net.preferIPv4Stack=true",
+        **(extra_conf or {}),
+    }
+    b = SparkSession.builder.master(f"local[{n}]").appName(app_name)
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -121,3 +121,31 @@ def test_iceberg_dispatch_plumbing_mocked(spark):
     df3.sparkSession.conf.get.return_value = "parquet"
     etl.write_table(df3, "cat.db.t", fmt="iceberg")
     df3.writeTo.assert_called_once_with("cat.db.t")
+
+
+def test_cluster_session_applies_shared_sql_conf(monkeypatch):
+    """The spark-submit session sets every key of session.sql_conf (the
+    local factory's SQL/Arrow settings), with the same values."""
+    from pyspark.sql import SparkSession
+
+    from gdal_scripts_spark.session import sql_conf
+
+    class Recorder:
+        def __init__(self):
+            self.conf = {}
+
+        def appName(self, name):
+            return self
+
+        def config(self, k, v):
+            self.conf[k] = v
+            return self
+
+        def getOrCreate(self):
+            return self.conf
+
+    monkeypatch.setenv("SPARK_GRAFT_CLUSTER", "1")
+    monkeypatch.setattr(SparkSession, "builder", Recorder())
+    conf = cli.cluster_spark("t")
+    assert conf == sql_conf()
+    assert conf["spark.sql.adaptive.coalescePartitions.enabled"] == "true"

@@ -1,12 +1,11 @@
-"""Spatial join paths (broadcast PiP, cell-keyed equi-join, salted) must all
-match the sequential numpy oracle exactly (BASELINE north_star: join result
-rows exact)."""
+"""Spatial join paths (broadcast PiP, table-driven S2 with the pure-Column
+refine) must match the sequential numpy oracle exactly (BASELINE north_star:
+join result rows exact)."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from gdal_scripts_spark import fixtures, geom, joins
 
@@ -37,23 +36,6 @@ def test_broadcast_join_matches_oracle(world):
     images, pack, oracle = world
     got = _collect_pairs(joins.spatial_join_broadcast(images, pack))
     assert len(oracle) > 20  # fixture really produces hits
-    assert got == oracle
-
-
-def test_cell_join_matches_oracle(world):
-    images, pack, oracle = world
-    got = _collect_pairs(joins.spatial_join_cells(images, pack, z=8))
-    assert got == oracle
-
-
-def test_cell_join_salted_matches_oracle(world):
-    images, pack, oracle = world
-    got = _collect_pairs(
-        joins.spatial_join_cells(
-            images, pack, z=8, salt=True, hot_cell_threshold=5, n_salts=4,
-            force_shuffle_join=True,
-        )
-    )
     assert got == oracle
 
 
@@ -88,43 +70,11 @@ def test_no_python_udf_in_cell_key_stage(world):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_native_join_matches_oracle(world):
-    images, pack, oracle = world
-    got = _collect_pairs(joins.spatial_join_native(images, pack, z=8))
-    assert got == oracle
-
-
-def test_cell_join_native_refine_matches_oracle(world):
-    images, pack, oracle = world
-    got = _collect_pairs(
-        joins.spatial_join_cells(
-            images, pack, z=8, salt=True, hot_cell_threshold=5, n_salts=4,
-            refine="native",
-        )
-    )
-    assert got == oracle
-
-
-def test_native_join_plan_has_no_python_stage(world):
-    """The native path's contract: zero Python workers in the plan and a
-    broadcast polygon side. (It is NOT the fast path — interpreted HOF
-    evaluation measured ~20x slower than the Arrow refine,
-    BENCH/pip_native_ab_r3.json — but the plan shape must hold.)"""
-    images, pack, _ = world
-    plan = (
-        joins.spatial_join_native(images, pack, z=8)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInArrow",
-                   "FlatMapGroupsInPandas", "MapInPandas"):
-        assert marker not in plan
-    assert "BroadcastHashJoin" in plan
-
-
 def test_native_join_holed_polygon_parity():
-    """Even-odd fold over all rings: a point in the hole is OUTSIDE, a point
-    in the annulus is inside — checked against the numpy kernel on a
-    constructed donut (not just the random fixtures)."""
+    """Even-odd fold over all rings (the pack=None refine of
+    spatial_join_s2): a point in the hole is OUTSIDE, a point in the
+    annulus is inside — checked on a constructed donut (not just the
+    random fixtures)."""
     from gdal_scripts_spark.session import get_spark
 
     spark = get_spark()
@@ -135,5 +85,9 @@ def test_native_join_holed_polygon_parity():
         [("in_annulus", 1.5, 5.0), ("in_hole", 5.0, 5.0), ("outside", 11.0, 5.0)],
         schema="image_id string, lon double, lat double",
     )
-    got = _collect_pairs(joins.spatial_join_native(pts, pack, z=8))
+    got = _collect_pairs(joins.spatial_join_s2(
+        pts, None,
+        regions=joins.s2_cover_regions(spark, pack, max_level=10, cover="rings"),
+        edges=joins.pack_edges_df(spark, pack),
+    ))
     assert got == {("in_annulus", 7)}

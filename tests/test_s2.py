@@ -567,16 +567,19 @@ def test_polygon_edges_df_from_table_matches_pack(spark):
 
 
 def test_spatial_join_s2_native_refine_matches_arrow(spark):
-    """refine="native" (pure-Column parity fold + interior OR-bypass) is
-    pair-identical to the Arrow refine, broadcast and shuffled."""
+    """pack=None (pure-Column parity fold + interior OR-bypass) over the
+    driver-built rings covering and edge table is pair-identical to the
+    Arrow refine, broadcast and shuffled."""
     from gdal_scripts_spark import fixtures, joins
 
     pts = fixtures.points_spark(spark, 4000, partitions=8)
     pack = fixtures.polygons_pack(p=60)
+    regions = joins.s2_cover_regions(spark, pack, max_level=8, cover="rings")
+    edges = joins.pack_edges_df(spark, pack)
     b = set(map(tuple, joins.spatial_join_broadcast(pts, pack).collect()))
     for bc in (True, False):
         a = set(map(tuple, joins.spatial_join_s2(
-            pts, pack, max_level=8, cover="rings", refine="native",
+            pts, None, regions=regions, edges=edges,
             broadcast_regions=bc).collect()))
         assert a == b and len(a) > 0
 
@@ -593,8 +596,8 @@ def test_spatial_join_s2_fully_table_driven(spark):
     regions = joins.s2_cover_regions_from_table(polys, max_level=8)
     edges = joins.polygon_edges_df_from_table(polys)
     df = joins.spatial_join_s2(
-        pts, None, id_col="image_id", regions=regions, refine="native",
-        edges=edges, broadcast_regions=False)
+        pts, None, id_col="image_id", regions=regions, edges=edges,
+        broadcast_regions=False)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" not in plan, "dim side silently broadcast"
     a = set(map(tuple, df.collect()))
@@ -604,7 +607,8 @@ def test_spatial_join_s2_fully_table_driven(spark):
 
 def test_spatial_join_s2_pack_none_requires_artifacts(spark):
     """pack=None without the table-side artifacts fails eagerly, naming
-    every missing piece."""
+    every missing piece; an edges table next to a pack (which the Arrow
+    refine would ignore) fails too."""
     from gdal_scripts_spark import fixtures, joins
 
     pts = fixtures.points_spark(spark, 100, partitions=2)
@@ -612,12 +616,15 @@ def test_spatial_join_s2_pack_none_requires_artifacts(spark):
         joins.spatial_join_s2(pts, None)
     polys = fixtures.polygons_spark(spark, p=5)
     regions = joins.s2_cover_regions_from_table(polys, max_level=8)
+    edges = joins.polygon_edges_df_from_table(polys)
     with pytest.raises(ValueError, match="edges"):
-        joins.spatial_join_s2(pts, None, regions=regions, refine="native")
+        joins.spatial_join_s2(pts, None, regions=regions)
     with pytest.raises(ValueError, match="prefilter_tiles"):
-        joins.spatial_join_s2(pts, None, regions=regions, prefilter_z=6)
-    with pytest.raises(ValueError, match="refine"):
-        joins.spatial_join_s2(pts, None, regions=regions, refine="bogus")
+        joins.spatial_join_s2(pts, None, regions=regions, edges=edges,
+                              prefilter_z=6)
+    with pytest.raises(ValueError, match="edges"):
+        joins.spatial_join_s2(pts, fixtures.polygons_pack(p=5),
+                              regions=regions, edges=edges)
 
 
 def test_grid_cover_tiles_from_table_matches_driver(spark):
@@ -650,7 +657,7 @@ def test_spatial_join_s2_table_driven_prefiltered(spark):
     edges = joins.polygon_edges_df_from_table(polys)
     tiles = joins.grid_cover_tiles_from_table(polys, 8)
     df = joins.spatial_join_s2(
-        pts, None, regions=regions, refine="native", edges=edges,
+        pts, None, regions=regions, edges=edges,
         broadcast_regions=False, prefilter_z=8, prefilter_tiles=tiles)
     a = set(map(tuple, df.collect()))
     b = set(map(tuple, joins.spatial_join_broadcast(pts, pack).collect()))

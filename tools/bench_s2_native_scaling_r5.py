@@ -4,9 +4,9 @@
 The pip_s2 row in BENCH/BASELINE.md reads 0.249 efficiency because its
 Arrow refine moves EVERY candidate through the JVM->Arrow copy — a
 core-count-invariant floor on one memory bus. The round-5 table-driven
-shape (`spatial_join_s2(pack=None, refine="native",
-broadcast_regions=False, prefilter_z=12)`) has no Python anywhere in
-the refine: the parity fold is a JVM expression over the joined edge
+shape (`spatial_join_s2(pack=None, broadcast_regions=False,
+prefilter_z=12)`) has no Python anywhere in the refine: the parity
+fold is a JVM expression over the joined edge
 arrays, interior cells bypass it via OR short-circuit, and both joins
 are shuffled hash joins. The codegen grid prefilter (cluster-built
 tiles — grid_cover_tiles_from_table, the third and last dim artifact
@@ -115,7 +115,7 @@ for _ in range(trials):
     ctrls.append(control())
     t0 = time.time()
     out = joins.spatial_join_s2(
-        points, None, regions=regions, refine="native", edges=edges,
+        points, None, regions=regions, edges=edges,
         broadcast_regions=False, prefilter_z=12, prefilter_tiles=tiles)
     pairs = out.count()
     walls.append(round(time.time() - t0, 2))
@@ -151,7 +151,7 @@ assert len({b["pairs"] for b in blocks}) == 1, "pair counts diverged"
 eff = round(min(w8) / min(w32) / 4.0, 3)
 out = {
     "workload": ("table-driven shuffled S2 covering join, native JVM refine"
-                 " (pack=None, refine='native', broadcast_regions=False,"
+                 " (pack=None, broadcast_regions=False,"
                  " prefilter_z=12 with cluster-built tiles): selective"
                  " high-latitude regime, rings covering lvl<=12"),
     "n_points": N_POINTS, "n_polygons": K_POLYS,

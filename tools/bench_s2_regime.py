@@ -8,17 +8,14 @@ outputs:
 
 - POINTS: hash-derived uniform coords in a HIGH-LATITUDE band
   (lat 55..85) — where a fixed-z mercator tile grid is up to ~11x finer
-  in linear extent than at the equator, so z-tile bbox covers either
-  explode in cell count (fine z) or in false candidates (coarse z). S2
-  cells are near-uniform on the sphere (the reason the path exists).
+  in linear extent than at the equator. S2 cells are near-uniform on the
+  sphere (the reason the path exists).
 - POLYGONS: K small rects covering ~2% of the band — SELECTIVE, so a
   plan that prunes non-matching points inside codegen (cell equi-join)
   avoids the measured JVM->Arrow copy floor that the broadcast-pip
   kernel pays for every point.
 - PLANS (identical (point, poly) outputs, checksum-verified):
     bc_pip        spatial_join_broadcast — every point crosses Arrow
-    z_cells_z9    z-tile equi-join + refine, coarse z
-    z_cells_z11   z-tile equi-join + refine, fine z
     s2_bc         S2 covering join, broadcast regions
     s2_pre        + prefilter_z=12 pure-Column lon/lat-grid prune (round 5)
     s2_pre_shuf   prefilter + broadcast_regions=False (the
@@ -84,8 +81,6 @@ cover_build_s = round(time.time() - t0, 2)
 
 PATHS = {
     "bc_pip": lambda: joins.spatial_join_broadcast(points, pack),
-    "z_cells_z9": lambda: joins.spatial_join_cells(points, pack, z=9),
-    "z_cells_z11": lambda: joins.spatial_join_cells(points, pack, z=11),
     "s2_bc": lambda: joins.spatial_join_s2(points, pack, regions=regions),
     "s2_pre": lambda: joins.spatial_join_s2(
         points, pack, regions=regions, prefilter_z=12),
@@ -122,7 +117,7 @@ ok = len(set(counts.values())) == 1 and len(set(chks.values())) == 1
 best = {k: min(v) for k, v in walls.items()}
 out = {
     "workload": ("selective high-latitude spatial join: identical "
-                 "(point,poly) outputs across 6 plans"),
+                 "(point,poly) outputs across 4 plans"),
     "n_points": N, "n_polygons": K, "rect_side_deg": SIDE,
     "lat_band": [LAT0, LAT1],
     "coverage_fraction": round(K * SIDE * SIDE / (120.0 * (LAT1 - LAT0)), 4),
