@@ -10,12 +10,13 @@ semantics (pixel kernels, ray-cast point-in-polygon, connected components).
 
 Module map (SURVEY.md §7):
   session     SparkSession factory tuned for binary-heavy Arrow batches
+  pydaemon    Python worker daemon that skips re-reading unchanged zip archives
   cells       GlobalMercator/GlobalGeodetic tile math, quadkey, Morton/Hilbert
               cell ids — native Column expressions (zero UDF)
   codecs      numpy image codecs (PPM/PGM/PNG via zlib), aHash, GDAL checksum
   fixtures    deterministic seeded generators for images/polygons/query_points
   geom        polygon packs, ray-cast PiP, shoelace area/centroid, rect clip
-  joins       cell-keyed + broadcast spatial joins, semi/anti, hot-cell salting
+  joins       broadcast PiP + S2 covering spatial joins, semi/anti, as-of join
   overlay     P5 GEOS predicate family (exact segment/PiP kernel) + U2 layer
               algebra (intersection/erase/union via convex S-H clip)
   knn         grid-partitioned kNN with sound ring expansion

@@ -139,12 +139,14 @@ def merge_upsert(
 
       - ``insert``    key only in incoming
       - ``update``    key in both, payload differs
-      - ``unchanged`` key in both, payload identical
+      - ``unchanged`` key in both, payload identical (two NULLs are
+        identical)
       - ``keep``      key only in current
 
     Returns (key, action, payload) with the winning payload per row —
-    exactly the post-merge table plus its change audit. One shuffle on
-    the key; payloads ride the join but never fan out. At Iceberg scale
+    exactly the post-merge table plus its change audit. Incoming keys must
+    be unique: a duplicate fans out through the full-outer join into one
+    row per copy. One shuffle on the key. At Iceberg scale
     the same plan runs as a storage-side MERGE; this is the engine-level
     equivalent with an explicit audit column."""
     c = current.select(
@@ -155,7 +157,7 @@ def merge_upsert(
     action = (
         F.when(F.col("_ck").isNull(), F.lit("insert"))
         .when(F.col("_ik").isNull(), F.lit("keep"))
-        .when(F.col("_cv") == F.col("_iv"), F.lit("unchanged"))
+        .when(F.col("_cv").eqNullSafe(F.col("_iv")), F.lit("unchanged"))
         .otherwise(F.lit("update"))
     )
     return j.select(

@@ -1283,11 +1283,12 @@ def convex_hull_agg(
 
     # carry the salt through so the final stage can de-duplicate the
     # per-bucket distinct counts
+    g_t = pts.schema[grp_col].dataType.simpleString()
     partial = salted.groupBy("_g", "_salt").applyInPandas(
         lambda pdf: local_hull(pdf).assign(_salt=pdf["_salt"].iloc[0]),
-        schema="_g long, _x double, _y double, _n long, _salt long",
+        schema=f"_g {g_t}, _x double, _y double, _n long, _salt long",
     )
     return partial.groupBy("_g").applyInPandas(
         final_hull,
-        schema="grp long, n_pts long, hull_area2 long, hull_perim double",
+        schema=f"grp {g_t}, n_pts long, hull_area2 long, hull_perim double",
     )

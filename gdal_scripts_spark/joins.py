@@ -167,7 +167,7 @@ def spatial_join_broadcast(
     lon: str = "lon",
     lat: str = "lat",
 ) -> DataFrame:
-    """(id_col, poly_id) pairs via one mapInPandas pass over the points.
+    """(id_col, poly_id) pairs via one mapInArrow pass over the points.
 
     The pack rides the closure → Spark broadcasts it once per executor;
     pixels/captions never enter the stage (column pruning keeps the scan to

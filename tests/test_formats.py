@@ -830,3 +830,7 @@ def test_convex_hull_agg_fanin_invariance(spark):
     a = sorted(map(tuple, formats.convex_hull_agg(df, fanin=1).collect()))
     b = sorted(map(tuple, formats.convex_hull_agg(df, fanin=16).collect()))
     assert a == b and len(a) == 3
+    # a string group key keeps its type through both grouped maps
+    sdf = df.withColumn("grp", F.concat(F.lit("g"), F.col("grp").cast("string")))
+    c = sorted(map(tuple, formats.convex_hull_agg(sdf, fanin=16).collect()))
+    assert c == [(f"g{r[0]}",) + r[1:] for r in a]
